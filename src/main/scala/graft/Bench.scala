@@ -104,8 +104,9 @@ object Bench {
     // min-of-2: this host's neighbor steal inflates single-shot timings
     // up to ~2×; the per-query min of two full passes is the robust
     // quiet-host estimate. Between passes the MEMOIZED tier is released
-    // through its lifecycle handle (releaseCaches drops the memo entries,
-    // so pass 2's first dedup/sketch query rebuilds AND re-persists them
+    // through its lifecycle handle (releaseCaches drops the SessionMemo
+    // entries and frees the session's tracked checkpoints, so pass 2's
+    // first dedup/sketch query rebuilds AND re-persists them
     // — clearCache alone would leave stale memo entries pointing at
     // evicted plans and pass 2 would run the whole tier uncached), then
     // any remaining cached plans are cleared.

@@ -34,10 +34,11 @@ object NorthStar {
   // not bytes, is the scaling unit. This is harness-input plumbing,
   // not operator design: production corpora arrive as many
   // files/splits and need no forced text shuffle.
-  // Base reads go through Queries' shared per-(session, dir, table)
-  // file-index memo — ~90 of the 198 queries bind documents/embeddings,
-  // and without the memo each re-lists the file and re-resolves the
-  // schema (the q-tier's round-9 lesson; released by [[releaseCaches]]).
+  // Base reads go through the shared per-(session, dir, table)
+  // file-index memo ([[Queries.t]], a [[SessionMemo]] view) — ~90 of the
+  // 198 queries bind documents/embeddings, and without the memo each
+  // re-lists the file and re-resolves the schema (the q-tier's round-9
+  // lesson; dropped by [[releaseCaches]]).
   // The repartition is a fresh plan node per call on the shared read.
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.Queries.t(s, dir, "documents")
@@ -627,49 +628,24 @@ object NorthStar {
   // harness documents table.
   //
   // Two intermediates are deliberately long-lived and memoized per
-  // (session, dir) — the same object is reused rather than hoping
-  // cache-manager canonical-plan matching re-finds it, and nothing is
-  // ever re-persisted (no "already cached" churn):
+  // (session, dir) in [[SessionMemo]] — the same object is reused rather
+  // than hoping cache-manager canonical-plan matching re-finds it, and
+  // nothing is ever re-persisted (no "already cached" churn):
   //  - the shingle-hash table (one sorted long array per doc) feeds both
   //    d03 and d04 — the materialized corpus representation a production
   //    pipeline would keep;
   //  - the exact pair set feeds THREE queries (d03 emits it, d06
   //    clusters it, d07 picks representatives).
   // Dedup's internal caches are released inside Dedup itself (its pair
-  // detectors materialize eagerly); [[releaseCaches]] frees the two
-  // memoized tables for long-lived sessions.
-  private val hsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val lshPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  // d20's threshold-0.6 pair table (strictly larger than the 0.8 set —
-  // must ride the same lifecycle, not stack a fresh persist per call)
-  private val histPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sketchMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int, Int), DataFrame]
-  /** Drop a stopped session's dedup-tier memo entries (the persisted
-    * blocks died with the context; unpersist would be a no-op). One
-    * [[SessionScope]] hook covers all six memos — registered at the
-    * insertion choke points (hsTable, sigTable, the g01 sketch; the
-    * pair/hist memos only ever hold keys hsTable already hooked). */
-  private def hookSession(s: SparkSession): Unit =
-    SessionScope.onStop("dedup-memos", s) { () =>
-      for (m <- Seq(hsMemo, pairsMemo, lshPairsMemo, histPairsMemo, sketchMemo))
-        m.keys.filter(_._1 == s).foreach(m.remove)
-      sigMemo.keys.filter(_._1 == s).foreach(sigMemo.remove)
-    }
-
+  // detectors materialize eagerly); [[releaseCaches]] frees the memoized
+  // tables for long-lived sessions. d20's threshold-0.6 pair table is
+  // strictly larger than the 0.8 set and rides the same lifecycle rather
+  // than stacking a fresh persist per call.
   private def hsTable(s: SparkSession, dir: String): DataFrame =
-    hsMemo.getOrElseUpdate((s, dir), {
-      hookSession(s)
+    SessionMemo(s, dir, "hs", persisted = true) {
       graft.operators.Dedup.shingleHashTable(docs(s, dir), "doc_id", "text", 3)
         .persist()
-    })
+    }
   // s06's (vec_id, signature, block) sketch table — computed ONCE and
   // persisted: both sides of the coarse self-join read it (without the
   // memo each branch re-derives every signature), and it is exactly the
@@ -684,8 +660,8 @@ object NorthStar {
     // the conf is part of the cache identity: setting/unsetting
     // annIndexDir mid-session must re-resolve, not serve the stale path
     val idxRoot = s.conf.getOption("spark.graft.annIndexDir")
-    sigMemo.getOrElseUpdate((s, dir + "#" + idxRoot.getOrElse(""), nBits, blocks), {
-      hookSession(s)
+    SessionMemo(s, dir, s"sig/$nBits/$blocks/${idxRoot.getOrElse("")}",
+        persisted = true) {
       val base = idxRoot match {
         case Some(root) =>
           // per-corpus path component: two corpora in one session must
@@ -707,7 +683,7 @@ object NorthStar {
       }
       base.withColumn("blk", pmod(col("vec_id"), lit(blocks)).cast("int"))
         .persist()
-    })
+    }
   }
   // r17 optimization: the 0.8 pair set is DERIVED from the persisted
   // 0.6 table (histPairs) instead of running a second full PPJoin.
@@ -722,46 +698,28 @@ object NorthStar {
   // d07/d13/d26 consume 0.8, d20 consumes 0.6); the looser build is the
   // superset machinery a production session would run once.
   private def neardupPairs(s: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, dir),
-      histPairs(s, dir).filter(col("jaccard") >= 0.8))
+    // a lazy FILTER VIEW of histPairs — not persisted (histPairs owns the
+    // blocks); release drops it so a rebuilt 0.6 table cannot serve a
+    // stale view
+    SessionMemo(s, dir, "pairs", persisted = false) {
+      histPairs(s, dir).filter(col("jaccard") >= 0.8)
+    }
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsMemo.getOrElseUpdate((s, dir),
+    SessionMemo(s, dir, "lshPairs", persisted = true) {
       graft.operators.Dedup.minhashLshPairs(hsTable(s, dir), 0.8,
-        k = 128, bands = 32, estFloor = 0.6))
+        k = 128, bands = 32, estFloor = 0.6)
+    }
   private def histPairs(s: SparkSession, dir: String): DataFrame =
-    histPairsMemo.getOrElseUpdate((s, dir),
-      graft.operators.Dedup.jaccardPairsExact(hsTable(s, dir), 0.6))
+    SessionMemo(s, dir, "histPairs", persisted = true) {
+      graft.operators.Dedup.jaccardPairsExact(hsTable(s, dir), 0.6)
+    }
 
-  /** Release the memoized dedup-tier caches for (session, dir) — the
-    * lifecycle handle for long-lived sessions (harness runs simply exit).
-    *
-    * WARNING — the chained [[graft.Checkpoints]] release is
-    * SESSION-scoped, not dir-scoped: tracked checkpoint blocks carry no
-    * corpus identity (they are minted deep inside operators that never
-    * see a path), so releasing corpus A also frees the checkpoints
-    * backing any still-held result built from corpus B in the SAME
-    * session, and re-executing such a result afterwards throws (its
-    * lineage is truncated). Materialize (collect / write) results from
-    * every corpus you care about before releasing ANY corpus, or use
-    * one session per corpus. The per-table memos above are genuinely
-    * dir-scoped; only the checkpoint registry is wider. */
-  def releaseCaches(s: SparkSession, dir: String): Unit = {
-    hsMemo.remove((s, dir)).foreach(_.unpersist())
-    // pairsMemo holds a lazy FILTER VIEW of histPairs since r17 — its
-    // unpersist is a no-op by design (histPairsMemo below owns the
-    // persisted blocks); the remove is what matters (drop the memo so a
-    // rebuilt 0.6 table cannot serve a stale view)
-    pairsMemo.remove((s, dir))
-    lshPairsMemo.remove((s, dir)).foreach(_.unpersist())
-    histPairsMemo.remove((s, dir)).foreach(_.unpersist())
-    sketchMemo.remove((s, dir)).foreach(_.unpersist())
-    // sig keys carry "dir#<annIndexDir>" (conf is part of cache identity)
-    sigMemo.keys.filter(k => k._1 == s && k._2.startsWith(dir + "#"))
-      .foreach(k => sigMemo.remove(k).foreach(_.unpersist()))
-    // the relational surface owns its own memos (coOrderEdges, shared
-    // file indexes) — one lifecycle entry point for callers
-    graft.Queries.releaseCaches(s, dir)
-  }
+  /** Release the memoized tables of (session, dir) and every tracked
+    * checkpoint of the session — the one lifecycle handle for long-lived
+    * sessions (harness runs simply exit). See the WARNING on
+    * [[SessionMemo]]: the checkpoint release is session-wide. */
+  def releaseCaches(s: SparkSession, dir: String): Unit =
+    SessionMemo.release(s, dir)
 
   private def jaccardOracle(threshold: Double): String =
     s"""WITH sh AS (
@@ -1330,7 +1288,7 @@ object NorthStar {
       // signature (the sigTable memo's lesson, applied locally)
       val ids = pairs.select(col("doc_a").as("doc_id"))
         .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-      val sig = graft.Checkpoints.tracked(docs(s, dir)
+      val sig = SessionMemo.checkpoint(docs(s, dir)
         .join(ids, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
           Hashing.fnvMinhashSignature(TF.shingles(col("text")), 128).as("sig")))
@@ -3680,7 +3638,7 @@ object NorthStar {
       // localCheckpoint materializes the batch assignment ONCE so the
       // self-join's two branches don't each redo the range-partition
       // sort — the in-session stand-in for writing the batched table
-      val batched = graft.Checkpoints.tracked(
+      val batched = SessionMemo.checkpoint(
         pos.select(expr(s"(pos - 1) div $B").as("batch_id"),
           col("vec_id"), col("label"), col("v")))
       val a = batched.select(col("batch_id"), col("vec_id").as("anchor_id"),
@@ -3815,7 +3773,12 @@ object NorthStar {
         .filter(col("df") === 1)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_uniq"))
       val nd = col("n_grams") - coalesce(col("n_uniq"), lit(0L))
-      docs(s, dir)
+      // the oracle unnests the shingle list, so a NULL-text doc has no
+      // row there; drop it here too instead of emitting a NULL novelty.
+      // Non-null text always has >= 1 shingle (a short doc is one joined
+      // shingle), so this IS n_grams > 0 — filtering on n_grams itself
+      // would re-run the shingle kernel in the pushed-down predicate
+      docs(s, dir).filter(col("text").isNotNull)
         .select(col("doc_id"),
           size(TF.shingles(col("text"))).cast(LongType).as("n_grams"))
         .join(uniqPerDoc, Seq("doc_id"), "left")
@@ -4160,8 +4123,7 @@ object NorthStar {
       // the sketch table is memoized+persisted per (session, dir): it feeds
       // BOTH sides of the pair join (one aggregation, not two) and repeated
       // invocations must not stack fresh persists (releaseCaches frees it)
-      val sk = sketchMemo.getOrElseUpdate((s, dir), {
-        hookSession(s)
+      val sk = SessionMemo(s, dir, "sketch", persisted = true) {
         val t = docs(s, dir)
           .select(col("source"),
             Hashing.fnvMinhashSignature(TF.tokens(col("text")), 128).as("doc_sig"))
@@ -4170,7 +4132,7 @@ object NorthStar {
           .persist()
         t.count() // materialize the handful of per-source sketches once
         t
-      })
+      }
       sk.as("a").join(broadcast(sk.as("b")), col("a.source") < col("b.source"))
         .select(col("a.source").as("src_a"), col("b.source").as("src_b"),
           Hashing.minhashEstJaccard(col("a.sig"), col("b.sig")).as("est_jaccard"))

@@ -800,7 +800,7 @@ object ScaleDryRun {
       for ((op, body) <- ops) {
         val (rows, t, sb) = meter.measure(body())
         println(f"| $label | $op | $rows | $t%.1f | ${fmtBytes(sb)} |")
-        Checkpoints.release(spark)
+        SessionMemo.releaseCheckpoints(spark)
       }
       val mOps = Seq("m09_image_neardup", "m12_audio_neardup")
       val dir = if (x) synthDir else srcDir
@@ -820,9 +820,9 @@ object ScaleDryRun {
     println("|---|---|---|---|---|---|---|")
     val flat: Seq[(String, () => Long, () => Unit)] = Seq(
       ("g08_kcore", () => operators.Graph.kCore(e30(true), k = 12).count(),
-        () => Checkpoints.release(spark)),
+        () => SessionMemo.releaseCheckpoints(spark)),
       ("g11_lpa_labels", () => operators.Graph.labelPropagation(e46(true), rounds = 4).count(),
-        () => Checkpoints.release(spark)),
+        () => SessionMemo.releaseCheckpoints(spark)),
       ("m09_image_neardup", () => SparkEntry.queries("m09_image_neardup")(spark, synthDir).count(),
         () => NorthStar.releaseCaches(spark, synthDir)),
       ("m12_audio_neardup", () => SparkEntry.queries("m12_audio_neardup")(spark, synthDir).count(),
@@ -898,7 +898,7 @@ object ScaleDryRun {
           "g05_triangles" -> (() => triRun(x)))) {
         val (rows, t, sb) = meter.measure(body())
         println(f"| $label | $op | $rows | $t%.1f | ${fmtBytes(sb)} |")
-        Checkpoints.release(spark)
+        SessionMemo.releaseCheckpoints(spark)
         NorthStar.releaseCaches(spark, srcDir)
       }
     }
@@ -911,7 +911,7 @@ object ScaleDryRun {
         "g05_triangles" -> (() => triRun(true)))) {
       val cells = (1 to 3).flatMap { _ =>
         body(); val afterRun = storageSummary(spark)
-        Checkpoints.release(spark); Seq(afterRun, storageSummary(spark))
+        SessionMemo.releaseCheckpoints(spark); Seq(afterRun, storageSummary(spark))
       }
       println(s"| $op | ${cells.mkString(" | ")} |")
     }
@@ -1025,6 +1025,10 @@ object ScaleDryRun {
     // ids must stay below that offset so the two id spaces stay disjoint
     require(offP * factor < 10000000L,
       s"part id space overflow: ${offP * factor} >= 1e7")
+    // and replicated supplier ids must stay below it too, or a supplier
+    // id collides with an offset part id
+    require(offS * factor < 10000000L,
+      s"supplier id space overflow: ${offS * factor} >= 1e7")
     materialize(spark, s"$synthDir/lineitem.parquet") {
       li.select(col("l_suppkey"), col("l_partkey"),
           explode(sequence(lit(0L), lit(factor - 1L))).as("c"))

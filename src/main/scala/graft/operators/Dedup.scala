@@ -49,13 +49,6 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       Hashing.shingleHashSet(TF.tokens(col(textCol)), n).as("hs"))
 
-  /** String-shingle variant of [[shingleHashTable]] — kept for callers
-    * that need the shingle text itself (debugging, explainability). The
-    * pair detectors do not use it. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"), TF.tokens(col(textCol)).as("tk"))
-      .select(col("doc_id"), TF.shinglesFromTokens(col("tk"), n).as("sh"))
-
   /**
    * Exact Jaccard pairs ≥ threshold, AllPairs/PPJoin family. Three exact
    * (recall-lossless) filters shrink the candidate set before any pair is
@@ -248,7 +241,7 @@ object Dedup {
     // partitioning, so all three consumers still plan exchange-free on
     // this side; 20-byte rows make the materialization cheap at any
     // corpus size relative to the duplicate shuffle it removes.
-    val sh = graft.Checkpoints.tracked(
+    val sh = graft.SessionMemo.checkpoint(
       hsTable.select(col("doc_id"), size(col("hs")).as("n"),
           explode(col("hs")).as("s"))
         .repartition(par, col("s")))
@@ -377,7 +370,7 @@ object Dedup {
     // two-leg union materialization ran the caller's (often expensive)
     // candidate-pair derivation once PER LEG — see Graph.bothDirections
     val edges = Graph.bothDirections(pairs, "doc_a", "doc_b").persist()
-    var labels = graft.Checkpoints.tracked(
+    var labels = graft.SessionMemo.checkpoint(
       edges.select(col("src").as("id")).distinct()
         .withColumn("component", col("id")))
     def checksum(df: DataFrame): java.math.BigDecimal =
@@ -396,22 +389,23 @@ object Dedup {
         .select(col("src").as("id"), col("component"))
       // feeds both sides of the shortcut self-join; tracked so the
       // FINAL round's blocks (which the returned result reads) are
-      // released at releaseCaches — superseded rounds are freed below
+      // released with the session's checkpoints (SessionMemo.release,
+      // via NorthStar.releaseCaches) — superseded rounds are freed below
       // as soon as the successor materializes
-      val propagated = graft.Checkpoints.tracked(labels.union(viaNeighbor)
+      val propagated = graft.SessionMemo.checkpoint(labels.union(viaNeighbor)
         .groupBy(col("id")).agg(min(col("component")).as("component")))
       // 2. shortcut: component := label(component) — the pointer-doubling
       // step that makes the round count logarithmic in the diameter
       val mapping = propagated.select(col("id").as("cid"), col("component").as("cc"))
       val prev = labels
-      labels = graft.Checkpoints.tracked(propagated
+      labels = graft.SessionMemo.checkpoint(propagated
         .join(mapping, col("component") === col("cid"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("cc"), col("component"))).as("component")))
       // the new labels checkpoint is eager — the previous round's
       // labels and this round's propagated are no longer read by anyone
-      graft.Checkpoints.free(prev)
-      graft.Checkpoints.free(propagated)
+      graft.SessionMemo.free(prev)
+      graft.SessionMemo.free(propagated)
       val cur = checksum(labels)
       converged = cur.compareTo(last) == 0
       last = cur
@@ -615,9 +609,9 @@ object Dedup {
     // expansions, the identical-hash join's both sides) — materialize
     // the 16-byte rows once instead of re-running the upstream per
     // branch. The RESULT reads these blocks lazily, so they ride the
-    // tracked-checkpoint lifecycle (released by releaseCaches) rather
-    // than leaking per invocation
-    val ph = graft.Checkpoints.tracked(hashes
+    // tracked-checkpoint lifecycle (SessionMemo.checkpoint, released
+    // with the session's checkpoints) rather than leaking per invocation
+    val ph = graft.SessionMemo.checkpoint(hashes
       .select(col(idCol).as("_id"), col(hashCol).as("_h"))
       .filter(col("_h").isNotNull))
     val hv = ph.select(col("_h")).distinct()

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** [[Checkpoints]]: the tracked-localCheckpoint lifecycle. Repeated
+/** [[SessionMemo]]'s tracked-localCheckpoint lifecycle. Repeated
   * invocations of the pair-engine / graph operators in ONE session must
   * not accumulate executor storage once the session releases its caches
   * — the round-9 leak (every call eagerly checkpointed its working
@@ -16,7 +16,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
   test("repeated pair-engine and graph invocations: storage is flat after release") {
     import spark.implicits._
     // start from a known-clean tracked set (other suites share the session)
-    Checkpoints.release(spark)
+    SessionMemo.releaseCheckpoints(spark)
     val base = persisted
     val hashes = Seq((1L, 0x00L), (2L, 0x01L), (3L, 0x01L), (4L, 0xf0f0L))
       .toDF("id", "h")
@@ -43,29 +43,29 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
       if (perCall < 0) perCall = now
       else assert(now == perCall,
         s"iteration $i grew tracked storage: $now persisted vs $perCall after first call")
-      Checkpoints.release(spark)
+      SessionMemo.releaseCheckpoints(spark)
       assert(persisted == base,
         s"release left ${persisted - base} persisted RDDs behind")
     }
   }
 
   test("release is idempotent and scoped: freeing twice / with nothing tracked is a no-op") {
-    Checkpoints.release(spark)
+    SessionMemo.releaseCheckpoints(spark)
     val base = persisted
-    Checkpoints.release(spark)
+    SessionMemo.releaseCheckpoints(spark)
     assert(persisted == base)
     // free() on an already-released checkpoint must not throw
     import spark.implicits._
-    val cp = Checkpoints.tracked(Seq(1, 2, 3).toDF("x"))
+    val cp = SessionMemo.checkpoint(Seq(1, 2, 3).toDF("x"))
     assert(cp.count() == 3)
-    Checkpoints.release(spark)
-    Checkpoints.free(cp)
+    SessionMemo.releaseCheckpoints(spark)
+    SessionMemo.free(cp)
     assert(persisted == base)
   }
 
   test("releaseCaches chains the tracked-checkpoint release") {
     import spark.implicits._
-    Checkpoints.release(spark)
+    SessionMemo.releaseCheckpoints(spark)
     val base = persisted
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
     assert(operators.Graph.linkPredict(edges).count() == 2)

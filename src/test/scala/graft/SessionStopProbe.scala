@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * Forked-JVM probe for [[SessionScope]]: populate every session-keyed
+ * Forked-JVM probe for [[SessionMemo]]'s stop hook: populate the
  * registry (table memo, co-order memo, tracked checkpoints), STOP the
- * session, and verify the stop hooks dropped all entries with no later
- * graft call — the retention scenario the round-10 ADVICE flagged
+ * session, and verify the stop hook dropped the session's scope with no
+ * later graft call — the retention scenario the round-10 ADVICE flagged
  * (a session that stops and is never followed by another graft call
  * used to be held, with its queued DataFrames, for the JVM lifetime).
  * Runs in its own JVM because stopping the shared test SparkContext
- * would kill every other suite. Exit 0 = clean, 1 = retained.
+ * would kill every other suite. Exit 0 = clean, 1 = retained,
+ * 2 = never populated, 3 = a post-stop insert left an entry.
  */
 object SessionStopProbe {
   def main(args: Array[String]): Unit = {
@@ -33,27 +34,31 @@ object SessionStopProbe {
     val lp = operators.Graph.labelPropagation(
       Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), 1)
     require(lp.count() == 3)
-    val populated = Queries.memoCount(spark) > 0 && Checkpoints.isTracking(spark)
+    val populated = SessionMemo.probe(spark).exists { case (memos, cps) =>
+      memos.nonEmpty && cps > 0 }
+    // built while the context is live: the post-stop insert below must
+    // not need one
+    val prebuilt = spark.emptyDataFrame
     spark.stop()
-    // the stop hooks must have fired synchronously-enough: the listener
+    // the stop hook must have fired synchronously-enough: the listener
     // bus drains before SparkContext.stop returns
-    val clean = !Checkpoints.isTracking(spark) &&
-      Queries.memoCount(spark) == 0 && SessionScope.pendingHooks == 0
+    val clean = SessionMemo.probe(spark).isEmpty
     if (!populated) { System.err.println("PROBE: registries never populated"); sys.exit(2) }
     if (!clean) {
-      System.err.println(s"PROBE: retained after stop — tracking=${Checkpoints.isTracking(spark)} " +
-        s"memos=${Queries.memoCount(spark)} hooks=${SessionScope.pendingHooks}")
+      System.err.println(s"PROBE: retained after stop — ${SessionMemo.probe(spark)}")
       sys.exit(1)
     }
-    // registering on an ALREADY-stopped session: the hook must fire
+    // a memo insert on an ALREADY-stopped session: the hook must fire
     // inline and leave no entry behind (the round-11 review found
     // getOrElseUpdate re-inserting the key AFTER the immediate-fire
     // block — a permanent strong retention of the stopped session)
-    var fired = 0
-    SessionScope.onStop("probe-post-stop", spark)(() => fired += 1)
-    if (fired != 1 || SessionScope.pendingHooks != 0) {
-      System.err.println(s"PROBE: post-stop registration leaked — " +
-        s"fired=$fired hooks=${SessionScope.pendingHooks}")
+    var built = 0
+    val got = SessionMemo(spark, dir, "probe-post-stop", persisted = false) {
+      built += 1; prebuilt
+    }
+    if (built != 1 || (got ne prebuilt) || SessionMemo.probe(spark).nonEmpty) {
+      System.err.println(s"PROBE: post-stop insert leaked — " +
+        s"built=$built entry=${SessionMemo.probe(spark)}")
       sys.exit(3)
     }
     println("PROBE: clean")

@@ -188,6 +188,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(out.size == 2)
   }
 
+  test("t23 n-gram novelty: a NULL-text doc has no row (the oracle's " +
+       "unnest row set), the others hand-computed") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_t23").toString
+    Seq[(Long, String, String, String, Long)](
+      (0L, "alpha beta gamma delta", "en", "s0", 22L),
+      (1L, null, "en", "s0", 0L),
+      (2L, "alpha beta gamma", "en", "s1", 16L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = NorthStar.queries("t23_ngram_novelty")(spark, dir)
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
+    // doc 0: {alpha beta gamma, beta gamma delta}; doc 2: {alpha beta
+    // gamma} — the shared gram is the only duplicated one
+    assert(out == Seq((0L, 2L, 1L, 0.5), (2L, 1L, 1L, 0.0)))
+  }
+
   test("law: t33 flag pass — array_contains + byte-gate equals the explode/semi-join/distinct shape on random corpora") {
     // pins the r18 t33 rewrite: "doc flagged" ⟺ its shingle set contains
     // its source's template gram. Reference = the r17 shape (explode the
