@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":"total",...,"queries":{...}}. Queries run
   * in name order after a session warm-up action, so timings are per-query
@@ -74,11 +73,7 @@ object Bench {
     // timed configuration IS the engine configuration — see
     // [[SessionDefaults]] for each setting's rationale and the
     // constraint-propagation re-enable condition.
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local(cpus)
     // warm-up: codegen + scheduler + parquet reader paths for every table
     spark.range(1000).selectExpr("sum(id)").collect()
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: print the formatted physical plan of one or more queries.
   * Usage: runMain graft.Explain <sfDir> <queryName> [queryName ...] */
 object Explain {
@@ -7,11 +6,7 @@ object Explain {
     val sfDir = args.head
     // shared engine config ([[SessionDefaults]]) so printed plans come
     // from the same optimizer configuration Bench/Verify run (r18)
-    val spark = SessionDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.local("4", logLevel = "ERROR")
     args.tail.foreach { name =>
       println(s"========== $name ==========")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1349,6 +1349,9 @@ object Queries {
       // hours landed in different partitions). The pin costs one
       // bounded-state exchange (the thing sketches exist to make tiny);
       // register maxima are order-independent, so results are identical.
+      // Re-measured without the pin (QueryMetrics, noop sink, sf0.1,
+      // local[4]): the register merge + window fan-out ran as ONE task
+      // with 987 ms CPU (229,816 partials written); with it, 4 tasks.
       val merged = windows(hllRegisters(ev, Seq("event_type", "hour"))
           .repartition(s.sparkContext.defaultParallelism,
             col("event_type"), col("j")))
@@ -1368,6 +1371,14 @@ object Queries {
       // partition with no further user-row exchange — only per-window
       // count partials cross afterwards. Same exact counts by set
       // semantics (dedup before or after windowing is equivalent).
+      // Re-measured without the pin (QueryMetrics, noop sink, sf0.1,
+      // local[4]): the ×24 explode + partial distinct ran as ONE task
+      // with 2,399 ms CPU and shipped 1,909,023 rows (15.2 MiB) to the
+      // distinct; with it, 4 tasks and 14,400 rows. Both pins stay on
+      // that evidence, though under the bench's count() action the
+      // pinned query is the slower one at local[4] (median 2.50 vs
+      // 2.09 s over 9 alternating runs each, faster in 6 of 9 pairs
+      // without the pins) — see the a09 item in ROADMAP.md.
       val du = ev.distinct()
         .repartition(s.sparkContext.defaultParallelism,
           col("event_type"), col("user_id"))

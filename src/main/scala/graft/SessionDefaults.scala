@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 /**
  * THE one place the engine-session configuration lives (r18, verdict
  * item: the timed configuration and the engine configuration must be
- * the same thing). Every main that builds a session — Bench, Verify,
- * Explain, StageProfile, TimeQuery, ScaleDryRun — routes its builder
- * through [[apply]]; master/parallelism stay with the caller (the
- * bench contract reads `$SPARK_GRAFT_CPUS`, Explain pins local[4]).
+ * the same thing). Every main — Bench, Verify, Explain, TimeQuery,
+ * ScaleDryRun — builds its session through [[local]]; the cpus value
+ * stays with the caller (the bench contract reads `$SPARK_GRAFT_CPUS`,
+ * Explain pins local[4]). [[apply]] serves callers that set their own
+ * master.
  *
  * The settings, with their reasons:
  *  - UTC session timezone — the oracle compares naive timestamps.
@@ -39,4 +40,15 @@ object SessionDefaults {
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
     .config("spark.sql.constraintPropagation.enabled", "false")
     .config("spark.local.dir", "/dev/shm/spark-local")
+
+  /** The `local[cpus]` session of the dev and bench mains: [[apply]]'s
+    * settings, `cpus` shuffle partitions, and the given log level. */
+  def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: time one query N times in a single session.
   * Usage: runMain graft.TimeQuery <sfDir> <queryName> [reps] */
 object TimeQuery {
@@ -9,11 +8,7 @@ object TimeQuery {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shared engine config ([[SessionDefaults]]) — timings transfer to
     // the bench session because the configuration IS the bench's
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local(cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
     for (i <- 1 to reps) {
       val t0 = System.nanoTime()

@@ -48,4 +48,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** Block until every listener event posted so far has been delivered
+    * (`waitUntilEmpty` is private[spark]) — [[graft.QueryMetrics]]'s
+    * deterministic settle in place of a sleep. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
